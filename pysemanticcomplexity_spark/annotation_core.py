@@ -24,6 +24,10 @@ against a broadcast gazetteer of surface forms:
 * ``@types`` is a comma-joined string split on ','; empty -> []
   (dbpediaClients.py:63-64).
 
+``GazetteerMatcher.match_doc_spans`` is the one per-document span walk;
+the staged (operators/annotate.py) and fused (operators/fused.py)
+annotators both project it. ``annotate`` (one paragraph) serves the oracle.
+
 Pure Python + tiny dicts: safe and cheap inside Arrow-batched
 ``mapInPandas`` workers with the gazetteer shipped once per executor via
 ``SparkContext.broadcast``.
@@ -33,7 +37,7 @@ from __future__ import annotations
 import re
 from typing import Dict, Iterator, List, Tuple
 
-__all__ = ["GazetteerMatcher", "Mention"]
+__all__ = ["GazetteerMatcher", "Mention", "matcher_config"]
 
 _TOKEN_RE = re.compile(r"\w+", re.UNICODE)
 
@@ -45,6 +49,22 @@ _PRESCAN_MAX_FIRST_TOKENS = 2048
 # Mention tuple fields (kept a plain tuple for Arrow friendliness):
 # (offset, surface, uri, types_list, similarity, psr, support, n_candidates)
 Mention = Tuple[int, str, str, List[str], float, float, int, int]
+
+
+def _check_policy(policy: str) -> None:
+    if policy not in ("whitelist", "blacklist"):
+        raise ValueError(f"policy must be 'whitelist' or 'blacklist', "
+                         f"got {policy!r}")
+
+
+def matcher_config(rows, confidence: float = 0.5, support: int = None,
+                   types=None, policy: str = "whitelist") -> dict:
+    """``GazetteerMatcher(**config)`` arguments as a plain dict to broadcast
+    (matchers are built per worker); a bad policy fails here, at plan-build
+    time, not inside an executor UDF."""
+    _check_policy(policy)
+    return {"rows": list(rows), "confidence": confidence, "support": support,
+            "types": list(types) if types else None, "policy": policy}
 
 
 class GazetteerMatcher:
@@ -70,9 +90,7 @@ class GazetteerMatcher:
     def __init__(self, rows, confidence: float = 0.5, support: int = None,
                  types: List[str] = None, policy: str = "whitelist"):
         """rows: iterable of (surface, uri, support, prior, spotlight_types_csv)."""
-        if policy not in ("whitelist", "blacklist"):
-            raise ValueError(f"policy must be 'whitelist' or 'blacklist', "
-                             f"got {policy!r}")
+        _check_policy(policy)
         self.confidence = confidence
         self.support = support
         self.types = set(types) if types else None
@@ -125,7 +143,7 @@ class GazetteerMatcher:
                 key=lambda x: (-x[0], x[1]),
             )
             self._scored[key] = scored
-        # Sentinel separator for annotate_doc_spans: a token that occurs in
+        # Sentinel separator for match_doc_spans: a token that occurs in
         # NO surface (so a multi-token surface can never match across a
         # paragraph boundary through it), wrapped in \x00 (non-word) so it
         # is a complete \w+ run of its own. Deterministic: first candidate
@@ -179,19 +197,16 @@ class GazetteerMatcher:
         surface is precomputed in ``_best`` at construction (the cached
         types list is shared across mentions — treat it as immutable)."""
         best = self._best
-        for offset, surface, key in self._match_spans(paragraph):
-            fin = best.get(key)
-            if fin is None:
-                continue
-            uri, types, sim, psr, support, n = fin
-            yield (offset, surface, uri, types, sim, psr, support, n)
+        return ((offset, surface) + best[key] for offset, surface, key
+                in self._match_spans(paragraph) if key in best)
 
-    def annotate_doc_spans(self, paragraphs: List[str]) \
-            -> Iterator[Tuple[int, str]]:
-        """Yield ``(doc_offset, key)`` for every kept mention across a whole
-        document's paragraphs, offsets already re-based to document
-        coordinates (P6: cumulative paragraph char lengths,
-        conceptExtraction.py:29).
+    def match_doc_spans(self, paragraphs: List[str]) \
+            -> Iterator[Tuple[int, str, str]]:
+        """Yield ``(doc_offset, surface, key)`` for every matched span across
+        a whole document's paragraphs, kept by disambiguation or not,
+        offsets already re-based to document coordinates (P6: cumulative
+        paragraph char lengths, conceptExtraction.py:29). The one
+        per-document span walk: both annotators project it.
 
         One prescan/tokenizer pass over the sentinel-joined paragraphs
         replaces one pass per paragraph — testdata paragraphs average ~10
@@ -203,14 +218,6 @@ class GazetteerMatcher:
         per-paragraph walk that stops at the paragraph end. Emitted in
         document order (tests assert equality with the per-paragraph path).
         """
-        best = self._best
-        if not paragraphs:
-            return
-        if len(paragraphs) == 1:
-            for off, _surface, key in self._match_spans(paragraphs[0]):
-                if key in best:
-                    yield (off, key)
-            return
         sep_len = len(self._sep)
         concat = self._sep.join(paragraphs)
         # concat start of paragraph k; doc offset = concat offset - k*sep_len
@@ -220,24 +227,18 @@ class GazetteerMatcher:
             starts.append(pos)
             pos += len(p) + sep_len
         k, n_par = 0, len(starts)
-        for off, _surface, key in self._match_spans(concat):
-            if key not in best:
-                continue
+        for off, surface, key in self._match_spans(concat):
             while k + 1 < n_par and off >= starts[k + 1]:
                 k += 1
-            yield (off - k * sep_len, key)
+            yield (off - k * sep_len, surface, key)
 
-    def annotate_candidates(self, paragraph: str) -> Iterator[Mention]:
-        """Yield *all* candidates per matched span (for the explicit
-        groupBy(url, mention).applyInPandas disambiguation stage)."""
-        for offset, surface, key in self._match_spans(paragraph):
-            scored = self._surviving(key)
-            if not scored:
-                continue
-            psr = (scored[1][0] / scored[0][0]) if len(scored) > 1 else 0.0
-            for sim, uri, support, types_csv, _ in scored:
-                types = types_csv.split(",") if types_csv else []
-                yield (offset, surface, uri, types, sim, psr, support, len(scored))
+    def annotate_doc_spans(self, paragraphs: List[str]) \
+            -> Iterator[Tuple[int, str]]:
+        """``(doc_offset, key)`` for every span kept by disambiguation (a
+        ``_best`` entry): the projection the fused kernel consumes."""
+        best = self._best
+        return ((off, key) for off, _surface, key
+                in self.match_doc_spans(paragraphs) if key in best)
 
     def _match_spans(self, paragraph: str):
         if self._prescan_re is not None:

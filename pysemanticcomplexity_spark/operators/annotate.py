@@ -1,4 +1,4 @@
-"""S7: deterministic gazetteer annotation — the pipeline's hot path.
+"""S7: deterministic gazetteer annotation — the staged pipeline's first stage.
 
 One ``mapInPandas`` pass fuses P1-P6 + S7 per page row (clean -> split ->
 filter -> Treebank count -> longest-match annotate -> offset re-base). All
@@ -15,9 +15,13 @@ one row per detected mention with document-level offsets
 (conceptExtraction.py:22-31 re-basing; no skip branch since there is no
 network — divergence documented in SURVEY.md §2.2 P6).
 
-``annotate_pages(..., emit='candidates')`` keeps all gazetteer candidates
-per mention for the explicit groupBy(url, mention).applyInPandas
-disambiguation stage (operators/disambiguate.py).
+Spans come from ``GazetteerMatcher.match_doc_spans``, the same
+per-document walk the fused kernel (operators/fused.py) projects; this
+module only maps each span to MENTIONS rows. ``emit='best'`` keeps the
+disambiguated candidate (``_best``); ``emit='candidates'`` keeps all
+surviving gazetteer candidates per mention for the explicit
+groupBy(url, mention).applyInPandas disambiguation stage
+(operators/disambiguate.py).
 """
 from __future__ import annotations
 
@@ -27,57 +31,31 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import schemas
-from ..annotation_core import GazetteerMatcher
-from ..ref_semantics import process_to_paragraphs
-from ..treebank import count_words
+from ..annotation_core import GazetteerMatcher, matcher_config
+from .preprocess import paragraphs_and_words
 
-__all__ = ["annotate_pages", "broadcast_gazetteer"]
+__all__ = ["annotate_pages"]
 
-
-def broadcast_gazetteer(spark: SparkSession, gazetteer_rows,
-                        confidence: float = 0.5, support: int = None,
-                        types=None, policy: str = "whitelist"):
-    """Ship the gazetteer once per executor (matcher built lazily per worker).
-
-    support/types/policy mirror the reference's Spotlight parameters
-    (dbpediaClients.py:34-51) — see annotation_core.GazetteerMatcher."""
-    if policy not in ("whitelist", "blacklist"):
-        # fail at plan-build time, not inside an executor UDF
-        raise ValueError(f"policy must be 'whitelist' or 'blacklist', "
-                         f"got {policy!r}")
-    return spark.sparkContext.broadcast(
-        {"rows": list(gazetteer_rows), "confidence": confidence,
-         "support": support, "types": list(types) if types else None,
-         "policy": policy})
+# fields of the per-document sentinel row (uri '' marks it; offset -1)
+_SENTINEL = ("", [], 0.0, 0.0, 0, 0)
 
 
-def _process_document(text: str, matcher: GazetteerMatcher):
-    """Fused P1-P6+S7 for one document; yields (nb_words, mentions)."""
-    paragraphs = process_to_paragraphs(text or "")
-    nb_words = sum(count_words(p) for p in paragraphs) if paragraphs else 0
-    mentions = []
-    offset_span = 0
-    for p in paragraphs:
-        for m in matcher.annotate(p):
-            (offset, surface, uri, types, sim, psr, support, ncand) = m
-            mentions.append((offset + offset_span, surface, uri, types,
-                             sim, psr, support, ncand))
-        offset_span += len(p)
-    return nb_words, mentions
+def _best_rows(matcher: GazetteerMatcher, key: str) -> list:
+    """The disambiguated mention fields of a span (none when dropped):
+    (uri, types, similarity, psr, support, n_candidates)."""
+    fin = matcher._best.get(key)
+    return [fin] if fin is not None else []
 
 
-def _candidates_document(text: str, matcher: GazetteerMatcher):
-    paragraphs = process_to_paragraphs(text or "")
-    nb_words = sum(count_words(p) for p in paragraphs) if paragraphs else 0
-    mentions = []
-    offset_span = 0
-    for p in paragraphs:
-        for m in matcher.annotate_candidates(p):
-            (offset, surface, uri, types, sim, psr, support, ncand) = m
-            mentions.append((offset + offset_span, surface, uri, types,
-                             sim, psr, support, ncand))
-        offset_span += len(p)
-    return nb_words, mentions
+def _candidate_rows(matcher: GazetteerMatcher, key: str) -> list:
+    """All surviving candidates of a span, best first."""
+    scored = matcher._surviving(key)
+    if not scored:
+        return []
+    psr = (scored[1][0] / scored[0][0]) if len(scored) > 1 else 0.0
+    return [(uri, types_csv.split(",") if types_csv else [], sim, psr,
+             support, len(scored))
+            for sim, uri, support, types_csv, _ in scored]
 
 
 def annotate_pages(spark: SparkSession, pages: DataFrame, gazetteer_rows,
@@ -90,36 +68,23 @@ def annotate_pages(spark: SparkSession, pages: DataFrame, gazetteer_rows,
     emit='candidates'  : all candidates per span (feed disambiguate stage).
     support/types/policy: Spotlight-parameter filters (dbpediaClients.py:34-51).
     """
-    bc = broadcast_gazetteer(spark, gazetteer_rows, confidence,
-                             support=support, types=types, policy=policy)
-    process = _process_document if emit == "best" else _candidates_document
+    # the gazetteer ships once per executor; matchers are built per worker
+    bc = spark.sparkContext.broadcast(matcher_config(
+        gazetteer_rows, confidence, support=support, types=types,
+        policy=policy))
+    project = _best_rows if emit == "best" else _candidate_rows
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cfg = bc.value
-        matcher = GazetteerMatcher(cfg["rows"], confidence=cfg["confidence"],
-                                   support=cfg.get("support"),
-                                   types=cfg.get("types"),
-                                   policy=cfg.get("policy", "whitelist"))
+        matcher = GazetteerMatcher(**bc.value)
         for pdf in batches:
-            out = {k: [] for k in ("url", "nb_words", "offset", "surface", "uri",
-                                   "spotlight_types", "similarity_score",
-                                   "percentage_second_rank", "support",
-                                   "n_candidates")}
+            rows = []
             for url, text in zip(pdf["url"], pdf["text"]):
-                nb_words, mentions = process(text, matcher)
-                rows = [( -1, "", "", [], 0.0, 0.0, 0, 0)] + mentions
-                for (off, surface, uri, types, sim, psr, support, ncand) in rows:
-                    out["url"].append(url)
-                    out["nb_words"].append(nb_words)
-                    out["offset"].append(off)
-                    out["surface"].append(surface)
-                    out["uri"].append(uri)
-                    out["spotlight_types"].append(types)
-                    out["similarity_score"].append(sim)
-                    out["percentage_second_rank"].append(psr)
-                    out["support"].append(support)
-                    out["n_candidates"].append(ncand)
-            yield pd.DataFrame(out)
+                paragraphs, nb_words = paragraphs_and_words(text)
+                rows.append((url, nb_words, -1, "") + _SENTINEL)
+                for off, surface, key in matcher.match_doc_spans(paragraphs):
+                    rows += [(url, nb_words, off, surface) + fields
+                             for fields in project(matcher, key)]
+            yield pd.DataFrame(rows, columns=schemas.MENTIONS.fieldNames())
 
     return (pages.select("url", "text")
             .mapInPandas(run, schema=schemas.MENTIONS))

@@ -87,11 +87,12 @@ def reliable_checkpointer(sc, checkpoint_dir):
     after an executor loss).
 
     The yielded function accepts ``eager=False`` for call sites that want
-    lineage truncation without a synchronous materialization job: the
-    checkpoint then fills on the first downstream job that reads it
-    (identical data/lineage semantics — eagerness only moves WHEN the
-    driver blocks, so a per-iteration ``ckpt`` stops being a per-round
-    driver sync point)."""
+    lineage truncation without a synchronous materialization job; only
+    ``localCheckpoint`` honours it, persisting on the first downstream job
+    that reads it (eagerness only moves WHEN the driver blocks). The
+    reliable branch always materializes: a lazy ``checkpoint()`` of a
+    non-topmost RDD in a job may never be written, so each round would
+    recompute its lineage."""
     if checkpoint_dir is None:
         yield (lambda df, eager=True: df.localCheckpoint(eager=eager))
         return
@@ -99,7 +100,7 @@ def reliable_checkpointer(sc, checkpoint_dir):
     prev_dir = prev.get() if prev.isDefined() else None
     sc.setCheckpointDir(checkpoint_dir)
     try:
-        yield (lambda df, eager=True: df.checkpoint(eager=eager))
+        yield (lambda df, eager=True: df.checkpoint(eager=True))
     finally:
         if prev_dir is not None:
             sc.setCheckpointDir(prev_dir)

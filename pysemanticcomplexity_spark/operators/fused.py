@@ -16,13 +16,16 @@ happen inside ONE Arrow-batched ``mapInPandas`` over the pages scan:
   * output is one compact row per document (url, nb_words,
     triples array<struct>, features array<double>), ~100x smaller than the
     input, exploded/projected into the triples and features tables;
-  * per-bucket lineage + resume (lineage.py) applies unchanged.
+  * per-bucket lineage + resume (lineage.py) applies unchanged: this is
+    the output ``KGPipeline.run_and_write`` writes.
 
 The staged DataFrame pipeline (pipeline.KGPipeline.run) remains the general
 path — needed when the entity universe is NOT bounded by a broadcastable
-gazetteer (e.g. open-vocabulary linking) — and is the path cross-checked
-against the pure-Python reference oracle; the fused path is additionally
-checked to be identical to the staged path (tests/test_fused.py).
+gazetteer (e.g. open-vocabulary linking) and for the stage-table CLI
+commands. Both paths share the per-document span walk
+(``GazetteerMatcher.match_doc_spans``) and P1-P5
+(``preprocess.paragraphs_and_words``); both are cross-checked against the
+pure-Python reference oracle and against each other (tests/test_fused.py).
 """
 from __future__ import annotations
 
@@ -35,10 +38,9 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import FEATURE_COLUMNS, PRED_HAS_TYPE, PRED_SUBCLASS_OF, VIRTUAL_ROOT
-from ..annotation_core import GazetteerMatcher
+from ..annotation_core import GazetteerMatcher, matcher_config
 from ..ontology import OntologyIndex
-from ..ref_semantics import process_to_paragraphs
-from ..treebank import count_words
+from .preprocess import paragraphs_and_words
 from .vectorize_kernel import compute_features
 
 __all__ = ["fused_docs", "triples_from_docs", "features_from_docs",
@@ -68,23 +70,16 @@ def build_broadcast_state(spark: SparkSession, gazetteer_rows,
     gazetteer size, not corpus size)."""
     from . import enrich
 
-    if policy not in ("whitelist", "blacklist"):
-        # fail at plan-build time, not inside an executor UDF
-        raise ValueError(f"policy must be 'whitelist' or 'blacklist', "
-                         f"got {policy!r}")
-
-    uris = sorted({uri for _s, uri, *_rest in gazetteer_rows})
+    matcher = matcher_config(gazetteer_rows, confidence, support=support,
+                             types=types, policy=policy)
+    uris = sorted({uri for _s, uri, *_rest in matcher["rows"]})
     uris_df = spark.createDataFrame([(u,) for u in uris], "uri string")
     info_rows = enrich.concept_info(
         uris_df, instance_types_df, kb_triples_df).collect()
     info_map = {r["uri"]: (sorted(r["types"]), int(r["nb_links_in"]),
                            int(r["nb_links_out"])) for r in info_rows}
     return spark.sparkContext.broadcast({
-        "gazetteer": list(gazetteer_rows),
-        "confidence": confidence,
-        "support": support,
-        "types": list(types) if types else None,
-        "policy": policy,
+        "matcher": matcher,
         "ontology_edges": [(c, p) for c, p, *_ in ontology_edge_rows],
         "info": info_map,
     })
@@ -169,8 +164,7 @@ class DocAssembler:
 def _document_kernel(url: str, text: str, assembler: DocAssembler,
                      with_features: bool = True):
     """One document end-to-end: mentions -> graph -> triples + features."""
-    paragraphs = process_to_paragraphs(text or "")
-    nb_words = sum(count_words(p) for p in paragraphs) if paragraphs else 0
+    paragraphs, nb_words = paragraphs_and_words(text)
     plan = assembler.plan
 
     # annotate (doc-rebased offsets, P6) + A5 count / last-mention-wins
@@ -248,10 +242,7 @@ def fused_docs(spark: SparkSession, pages: DataFrame, state,
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cfg = state.value
-        matcher = GazetteerMatcher(cfg["gazetteer"], confidence=cfg["confidence"],
-                                   support=cfg.get("support"),
-                                   types=cfg.get("types"),
-                                   policy=cfg.get("policy", "whitelist"))
+        matcher = GazetteerMatcher(**cfg["matcher"])
         onto = OntologyIndex(cfg["ontology_edges"])
         assembler = DocAssembler(matcher, onto, cfg["info"])
         for pdf in batches:

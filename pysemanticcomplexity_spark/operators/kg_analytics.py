@@ -254,11 +254,12 @@ def pagerank_fixed_point(edges: DataFrame, iters: int = 3,
         # round. All arithmetic stays int64 (17 * total mass bounds as
         # before).
         for _ in range(iters):
-            # eager=False: the round table still truncates lineage and
-            # persists once, but fills during the next job that reads it
-            # instead of a synchronous per-round driver round-trip (one
-            # straggler barrier per iteration removed; bitwise-identical
-            # ranks — eagerness does not touch the arithmetic)
+            # eager=False (localCheckpoint only): the round table still
+            # truncates lineage and persists once, but fills during the
+            # next job that reads it instead of a synchronous per-round
+            # driver round-trip (one straggler barrier per iteration
+            # removed; bitwise-identical ranks — eagerness does not touch
+            # the arithmetic)
             ro = ckpt(ranks.join(outdeg, "uri", "left"), eager=False)
             share_df = (ro.filter(F.col("outdeg").isNull())
                         .agg(F.coalesce(F.sum("rank"), F.lit(0))

@@ -16,15 +16,18 @@ stages — whole-stage-codegen'd JVM expressions, no Python:
                         running offset_span imperatively).
 
 The production pipeline does NOT use the window form — per-document offset
-re-basing is row-local, so the hot path fuses P1-P6 into the single
-``mapInPandas`` annotator pass (operators/annotate.py) and never shuffles
-the 100 TB pages table. These forms exist for correctness oracles and for
-users who want paragraph tables.
+re-basing is row-local, so both kernels (operators/annotate.py, fused.py)
+run P1-P6 in one ``mapInPandas`` pass, taking P1-P5 from
+``paragraphs_and_words``, and never shuffle the 100 TB pages table. These
+forms exist for correctness oracles and for users who want paragraph tables.
 
 P5 word count needs the Treebank tokenizer (pure Python) and is exposed as
 an Arrow-batched pandas UDF.
 """
 from __future__ import annotations
+
+import re
+from typing import List, Tuple
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -32,10 +35,20 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.functions import pandas_udf
 
+from ..treebank import count_words
+
 # Exact control-char class of text.py:12-14: \x00-\x09, \x0b-\x1f, \x80-\x9e
 # (Python's range(0x80, 0x9f) is inclusive-exclusive).
 CLEAN_PATTERN = r"[\x00-\x09\x0b-\x1f\x80-\x9e]"
 PARAGRAPH_THRESHOLD = 150
+_CLEAN_RE = re.compile(CLEAN_PATTERN)
+
+
+def paragraphs_and_words(text: str) -> Tuple[List[str], int]:
+    """P1-P5 for one document in Python: (kept paragraphs, nb_words)."""
+    paras = [p for p in _CLEAN_RE.sub(" ", text or "").split("\n\n")
+             if len(p) > PARAGRAPH_THRESHOLD]
+    return paras, sum(count_words(p) for p in paras)
 
 
 def clean_text_col(col) -> F.Column:

@@ -1,14 +1,18 @@
 """End-to-end KG-construction pipeline (reference texts2vectors lifecycle,
-SURVEY.md §3.1, re-expressed as one lazy Spark plan).
+SURVEY.md §3.1, re-expressed as Spark plans).
+
+Production: ``run_and_write`` writes the ``run_fused`` output (one
+shuffle-free ``mapInPandas`` per page row, operators/fused.py) as triples
+and features parquet tables partitioned by a url hash bucket, with
+per-bucket ``_lineage`` rows for resume (lineage.py).
+
+General staged path ``run`` (open entity universe, ``__spark_entry__`` KG
+queries, stage-table CLI commands), with identical output:
 
     pages ──mapInPandas(annotate: P1-P6+S7)──> mentions + doc_words
       mentions ──A5/J1/P7/P8──> resources ──G1-G3──> triples, nodes
       distinct uris ──A1-A4 joins──> concept_info (broadcast)
-      nodes+triples+doc_words ──cogroup applyInPandas──> features (M1-M10)
-
-Two materialization points (triples, features) like the reference's staged
-JSON layout (§3.2), here parquet tables partitioned by a url hash bucket so
-downstream stages and the resume layer (lineage.py) prune by partition.
+      nodes+triples+doc_words ──mapInPandas──> features (M1-M10)
 """
 from __future__ import annotations
 
@@ -51,7 +55,8 @@ class KGPipeline:
                  persist_intermediate: bool = True):
         """disambiguation: 'local' (inside the annotator, shuffle-free),
         'agg' (groupBy+max_by), or 'apply' (groupBy.applyInPandas,
-        north_star shape).
+        north_star shape) — staged ``run`` only; all three pick the same
+        mentions, and the fused path disambiguates locally.
 
         persist_intermediate: persist the annotated mentions (the expensive
         mapInPandas output) — it feeds several downstream branches (A5
@@ -145,20 +150,23 @@ class KGPipeline:
     def run_and_write(self, pages: DataFrame, out_dir: str,
                       n_buckets: int = 64,
                       run_id: str = "run",
-                      resume: bool = True) -> PipelineResult:
+                      resume: bool = True) -> None:
         """Materialize triples + features with per-bucket lineage and
-        checkpointed resume (lineage.py; north_rule requirement)."""
+        checkpointed resume (lineage.py; north_rule requirement).
+
+        Both tables project ONE fused per-document output, persisted for
+        the two writes only. Buckets are ``pmod(xxhash64(url), n_buckets)``
+        as in directories the staged path wrote, so a resume may complete
+        those."""
         from .lineage import resumable_write
 
-        pages_b = pages.withColumn(
-            "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
-        result = self.run(pages_b.drop("bucket"))
-
-        bucket = F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-        resumable_write(result.triples.withColumn("bucket", bucket),
-                        out_dir, "triples", run_id=run_id, resume=resume)
-        resumable_write(result.features.withColumn(
-                            "bucket",
-                            F.pmod(F.xxhash64("filename"), F.lit(n_buckets)).cast("int")),
-                        out_dir, "features", run_id=run_id, resume=resume)
-        return result
+        fused_out = self.run_fused(pages, persist_docs=True)
+        try:
+            for stage, table, url_col in (
+                    ("triples", fused_out.triples, "url"),
+                    ("features", fused_out.features, "filename")):
+                bucket = F.pmod(F.xxhash64(url_col), F.lit(n_buckets))
+                resumable_write(table.withColumn("bucket", bucket.cast("int")),
+                                out_dir, stage, run_id=run_id, resume=resume)
+        finally:
+            fused_out.docs.unpersist()

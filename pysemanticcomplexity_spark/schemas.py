@@ -38,9 +38,6 @@ MENTIONS = T.StructType([
     T.StructField("n_candidates", T.LongType(), False),
 ])
 
-# Candidate rows prior to explicit disambiguation (same + is-best unknown).
-MENTION_CANDIDATES = MENTIONS
-
 # Per-document word counts for docs with zero mentions (kept for vector
 # parity: every page yields a feature row even when the graph is empty).
 DOC_WORDS = T.StructType([

@@ -13,6 +13,19 @@ from pyspark.sql import SparkSession
 __all__ = ["get_spark"]
 
 
+def default_driver_memory() -> str:
+    """40% of the host's RAM (/proc/meminfo MemTotal), at most 48g; 48g
+    where MemTotal is unreadable. In local mode the driver JVM is the whole
+    engine and shares the host with one python worker per core, so a fixed
+    heap larger than the host gets the JVM OOM-killed."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = int(f.readline().split()[1])     # MemTotal comes first
+    except (OSError, ValueError, IndexError):
+        return "48g"
+    return f"{min(48 * 1024, int(total_kb * 0.4 / 1024))}m"
+
+
 def get_spark(app_name: str = "pysemanticcomplexity_spark",
               master: str = None,
               shuffle_partitions: int = None,
@@ -47,7 +60,8 @@ def get_spark(app_name: str = "pysemanticcomplexity_spark",
         # Reference semantics are non-ANSI (NaN propagation, permissive
         # division); Spark 4 defaults ANSI on.
         .config("spark.sql.ansi.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")

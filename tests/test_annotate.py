@@ -1,6 +1,6 @@
 """S7 annotator + disambiguation variants."""
 import pyspark.sql.functions as F
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from pysemanticcomplexity_spark import fixtures
 from pysemanticcomplexity_spark.annotation_core import GazetteerMatcher
@@ -55,25 +55,41 @@ def test_prescan_matches_token_walk(words, sep):
         list(m._match_spans_scan(text))
 
 
-@given(st.lists(st.lists(st.sampled_from(_SPAN_WORDS), min_size=0,
+# "part" matches but has no _best entry (best similarity 0.4 < 0.5); with
+# support=300 "window" and "merge" lose theirs too (support filter)
+_DOC_WORDS = _SPAN_WORDS + ["part", "Part", "key", "window", "merge"]
+
+
+@given(st.lists(st.lists(st.sampled_from(_DOC_WORDS), min_size=0,
                           max_size=12).map(" ".join),
                 min_size=0, max_size=8))
+@example(["the part", "hash", "join part"])
+@example(["window merge", "sort merge join", "part"])
 @settings(max_examples=150, deadline=None)
 def test_doc_spans_match_per_paragraph_walk(paragraphs):
-    """annotate_doc_spans (one sentinel-joined prescan per document) must
-    emit exactly the (doc_offset, uri) sequence of the per-paragraph
-    annotate() walk with P6 offset re-basing — including multi-token
-    surfaces that would span a paragraph boundary (must NOT match)."""
-    m = _matcher()
-    expected = []
-    span = 0
-    for p in paragraphs:
-        for (off, _surface, uri, *_rest) in m.annotate(p):
-            expected.append((off + span, uri))
-        span += len(p)
-    got = [(off, m._best[key][0])
-           for off, key in m.annotate_doc_spans(paragraphs)]
-    assert got == expected
+    """match_doc_spans (one sentinel-joined prescan per document) must
+    emit exactly the (doc_offset, surface, key) sequence of the
+    per-paragraph _match_spans walk with P6 offset re-basing — including
+    spans whose key has no _best entry (what emit='candidates' projects)
+    and multi-token surfaces that would span a paragraph boundary (must
+    NOT match). Its kept projection, annotate_doc_spans, must equal the
+    per-paragraph annotate() walk."""
+    for m in (_matcher(), GazetteerMatcher(fixtures.gazetteer(),
+                                           confidence=0.5, support=300)):
+        all_spans, kept = [], []
+        span = 0
+        for p in paragraphs:
+            all_spans += [(off + span, surface, key)
+                          for off, surface, key in m._match_spans(p)]
+            kept += [(off + span, surface, uri)
+                     for (off, surface, uri, *_rest) in m.annotate(p)]
+            span += len(p)
+        got = list(m.match_doc_spans(paragraphs))
+        assert got == all_spans
+        assert [(off, surface, m._best[key][0]) for off, surface, key in got
+                if key in m._best] == kept
+        assert list(m.annotate_doc_spans(paragraphs)) == \
+            [(off, key) for off, _surface, key in got if key in m._best]
 
 
 def test_non_ascii_gazetteer_falls_back():

@@ -146,6 +146,20 @@ def test_pagerank_bitwise_deterministic_across_partitionings(spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
+def test_pagerank_reliable_checkpoint(spark, tmp_path):
+    """checkpoint_dir= switches the per-round localCheckpoint(eager=False)
+    to reliable checkpoints, which always materialize: same ranks as the
+    no-dir run, and the checkpoint directory is actually written."""
+    import os
+    df = spark.createDataFrame(DANGLING + DIRECTED, "src string, dst string")
+    ckdir = str(tmp_path / "ck")
+    want = sorted(map(tuple, pagerank_fixed_point(df, iters=4).collect()))
+    got = sorted(map(tuple, pagerank_fixed_point(
+        df, iters=4, checkpoint_dir=ckdir).collect()))
+    assert got == want
+    assert os.listdir(ckdir), "reliable checkpoint dir should be non-empty"
+
+
 def test_pagerank_mass_approximately_conserved(spark):
     df = spark.createDataFrame(DIRECTED, "src string, dst string")
     out = pagerank_fixed_point(df, iters=6)

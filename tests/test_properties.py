@@ -26,6 +26,21 @@ def test_clean_split_filter_invariants(t):
         assert "\n\n" not in p
 
 
+@settings(max_examples=200, deadline=None)
+@given(texts | st.lists(st.text(alphabet="ab \n\t\x00\x85\x9f",
+                                min_size=140, max_size=170),
+                        max_size=5).map("\n\n".join))
+def test_production_paragraphs_match_oracle(t):
+    """The kernels' P1-P5 helper equals the oracle's transcription,
+    including control characters and paragraph-threshold edges."""
+    from pysemanticcomplexity_spark.operators.preprocess import (
+        paragraphs_and_words)
+    from pysemanticcomplexity_spark.treebank import count_words
+    paras = R.process_to_paragraphs(t)
+    assert paragraphs_and_words(t) == (
+        paras, sum(count_words(p) for p in paras))
+
+
 @settings(max_examples=100, deadline=None)
 @given(st.lists(st.text(alphabet="abcdefgh ", min_size=151, max_size=200),
                 max_size=5))
