@@ -1,94 +1,35 @@
-"""IVF with cells >> cores (BENCH/SIMILARITY.md follow-up): demonstrates
-the documented mitigation for both cell skew and the cogroup-task bound —
-with n_centroids in {16, 256, 1024} on the replicated corpus the blas
-kernel's scoring stage has 256-1024 parallel groups instead of 16.
+"""IVF with cells >> cores (BENCH/SIMILARITY.md follow-up): wall time and
+recall@5 versus nprobe at n_centroids in {16, 256, 1024} on the
+sign-flip-replicated corpus of ``bench_scaling.py``, at one level
+(``local[default_cpus]``), against exact ground truth from cosine_topk on
+the same corpus. The blas kernel's scoring stage then has 256-1024
+parallel groups instead of 16.
 
-Measures, in separate JVMs per parallelism level (BENCH/BASELINE.md
-protocol):
-  * blas-kernel scaling 2 -> 8 -> 32 cores at n_centroids=256;
-  * wall vs cell count at local[32] (16 / 256 / 1024 cells);
-  * recall@5 vs nprobe at 256 and 1024 cells (exact ground truth from
-    cosine_topk on the same corpus).
+    python bench_ivf_cells.py
 
-Replication is the sign-flip isometry of bench_scaling_sim.py (buckets and
-cells scatter independently per replica; identical copies would measure a
-candidate-join pathology instead of the operator).
+Its N-vs-4N scaling point is ``python bench_scaling.py ivf_blas_256``; the
+input (SCALE_REPLICAS, default that job's x96) is shared with it.
 """
 from __future__ import annotations
 
 import json
-import os
-import subprocess
-import sys
+import time
 
-REPO = os.path.dirname(os.path.abspath(__file__))
-
-PREP = r"""
-import sys
-sys.path.insert(0, __REPO__)
-import pyspark.sql.functions as F
-from pysemanticcomplexity_spark.session import get_spark
-
-sf_dir, out, replicas = sys.argv[1], sys.argv[2], int(sys.argv[3])
-spark = get_spark(app_name="ivf-cells-prep")
-emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-flipped = F.transform(
-    "embedding",
-    lambda x, i: x * F.when(F.xxhash64(F.col("r"), i) % 2 == 0,
-                            F.lit(1.0)).otherwise(F.lit(-1.0)).cast("float"))
-# r*10M must be LONG arithmetic: int32 r*10_000_000 silently wraps at
-# r >= 215 (replicas > 214), colliding vec_ids across replicas
-big = (emb.withColumn("r", F.explode(F.sequence(F.lit(0), F.lit(replicas - 1))))
-       .select((F.col("vec_id")
-                + F.col("r").cast("long") * F.lit(10_000_000).cast("long"))
-               .alias("vec_id"),
-               flipped.alias("embedding")))
-big.repartition(64).write.mode("overwrite").parquet(out)
-print("PREP", big.count())
-spark.stop()
-"""
-
-RUNNER = r"""
-import json, sys, time
 import numpy as np
-sys.path.insert(0, __REPO__)
 import pyspark.sql.functions as F
-from pysemanticcomplexity_spark.operators.similarity import cosine_topk, ivf_topk
-from pysemanticcomplexity_spark.session import get_spark
 
-cpus, path, mode = int(sys.argv[1]), sys.argv[2], sys.argv[3]
-spark = get_spark(app_name=f"ivf-cells{cpus}", master=f"local[{cpus}]",
-                  shuffle_partitions=cpus * 2,
-                  extra_conf={
-                      "spark.sql.files.maxPartitionBytes": "1m",
-                      "spark.sql.files.openCostInBytes": "64k",
-                  })
-emb = spark.read.parquet(path)
-n_vec = emb.count()
+import bench_scaling as B
+from pysemanticcomplexity_spark.operators.similarity import (
+    cosine_topk, ivf_topk)
+from pysemanticcomplexity_spark.session import default_cpus, get_spark
 
-def cents_for(n):
-    c = np.random.RandomState(7).randn(n, 64)
-    return c / np.linalg.norm(c, axis=1, keepdims=True)
 
-out = {"cpus": cpus, "vectors": n_vec}
-if mode == "scale":
-    # scaling probe: 256 cells, blas kernel, queries = 100 per replica
-    queries = emb.filter(F.col("vec_id") % 10_000_000 < 100)
-    cents = cents_for(256)
-
-    def job():
-        return ivf_topk(emb, queries, k=5, centroids=cents, nprobe=8,
-                        kernel="blas").count()
-    ivf_topk(emb.limit(2048), queries.limit(32), k=5, centroids=cents,
-             nprobe=8, kernel="blas").count()            # warmup
-    best, rows = None, None
-    for _ in range(2):
-        t0 = time.time(); rows = job(); dt = time.time() - t0
-        best = dt if best is None or dt < best else best
-    out["ivf_blas_256"] = {"rows": rows, "wall_s": round(best, 3),
-                           "vec_per_sec": round(n_vec / best, 1)}
-elif mode == "cells":
-    # cell-count sweep at one level + recall-vs-nprobe (exact GT once)
+def main():
+    cpus = default_cpus()
+    spark = get_spark(app_name=f"ivf-cells{cpus}", master=f"local[{cpus}]",
+                      shuffle_partitions=cpus * 2, extra_conf=B.SCAN_1M)
+    emb = spark.read.parquet(B.write_input(spark, B.JOBS["ivf_blas_256"]))
+    out = {"cpus": cpus, "vectors": emb.count()}
     queries = emb.filter(F.col("vec_id") < 100)          # one replica's 100
     exact = {}
     t0 = time.time()
@@ -97,7 +38,7 @@ elif mode == "cells":
     out["exact_gt_wall_s"] = round(time.time() - t0, 3)
     sweeps = []
     for n_cells in (16, 256, 1024):
-        cents = cents_for(n_cells)
+        cents = B.spherical_centroids(n_cells)
         for nprobe in (1, 4, 16, 64):
             if nprobe > n_cells:
                 continue
@@ -113,42 +54,8 @@ elif mode == "cells":
                            "wall_s": round(wall, 3),
                            "recall_at_5": round(float(rec), 4)})
     out["sweep"] = sweeps
-print("RESULT " + json.dumps(out))
-spark.stop()
-"""
-
-
-def run(script: str, *args, timeout=3600) -> str:
-    p = subprocess.run(
-        [sys.executable, "-c", script.replace("__REPO__", repr(REPO)), *args],
-        capture_output=True, text=True, timeout=timeout)
-    if p.returncode != 0:
-        raise RuntimeError(p.stderr[-4000:])
-    return p.stdout
-
-
-def main():
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    replicas = int(os.environ.get("IVF_CELLS_REPLICAS", "96"))
-    work = os.environ.get("IVF_CELLS_DIR", "/tmp/ivf_cells_emb")
-    modes = os.environ.get("IVF_CELLS_MODES", "scale,cells").split(",")
-    print(run(PREP, sf_dir, work, str(replicas)).strip())
-    if "scale" in modes:
-        results = []
-        for cpus in (2, 8, 32):
-            out = run(RUNNER, str(cpus), work, "scale")
-            line = [ln for ln in out.splitlines()
-                    if ln.startswith("RESULT ")][0]
-            res = json.loads(line[len("RESULT "):])
-            results.append(res)
-            print(json.dumps(res))
-        t = {r["cpus"]: r["ivf_blas_256"]["wall_s"] for r in results}
-        print("ivf_blas_256 eff 2->8:", round(t[2] / (4 * t[8]), 3),
-              "8->32:", round(t[8] / (4 * t[32]), 3))
-    if "cells" in modes:
-        out = run(RUNNER, "32", work, "cells")
-        line = [ln for ln in out.splitlines() if ln.startswith("RESULT ")][0]
-        print(json.dumps(json.loads(line[len("RESULT "):]), indent=1))
+    spark.stop()
+    print(json.dumps(out, indent=1))
 
 
 if __name__ == "__main__":

@@ -45,6 +45,15 @@ SAMPLE_DENOM = 1_000_000
 # the expression is ANSI-overflow-safe in both engines.
 SAMPLE_A = 387_420_489
 SAMPLE_B = 998_244_353
+# Most distinct benchmark shingles contamination_flags_rowlocal collects to
+# the driver. The set is held as a Python set by the driver and by every
+# Python worker (one per core) and shipped as a pickled broadcast: a 3-gram
+# of ~18 chars costs ~104 B in a set and ~24 B pickled (measured on 1M
+# shingles), so this cap is ~100 MB per process and ~25 MB of broadcast.
+# A benchmark of thousands of documents stays far below it; larger
+# benchmark sets belong to contamination_flags, which broadcast-joins them
+# in the JVM.
+MAX_ROWLOCAL_SHINGLES = 1_000_000
 
 
 def contamination_flags(docs: DataFrame, benchmark: DataFrame,
@@ -93,10 +102,11 @@ def contamination_flags_rowlocal(docs: DataFrame, benchmark: DataFrame,
                                  passthrough: bool = False) -> DataFrame:
     """ZERO-shuffle variant of ``contamination_flags``: per-document
     contamination is row-local once the benchmark shingle set is known, so
-    the set is collected (bounded by benchmark size) and broadcast into an
-    Arrow-batched kernel — the corpus is scanned once and never shuffled,
-    and the operator is stateless, which also makes it legal mid-stream in
-    Structured Streaming (no aggregation state, no watermark needed).
+    the set is collected (at most ``MAX_ROWLOCAL_SHINGLES``, else
+    ``ValueError``) and broadcast into an Arrow-batched kernel — the corpus
+    is scanned once and never shuffled, and the operator is stateless,
+    which also makes it legal mid-stream in Structured Streaming (no
+    aggregation state, no watermark needed).
 
     Semantics match ``contamination_flags`` (same normalization /
     shingling / zero-fill), asserted by an equality test; the python-side
@@ -115,9 +125,16 @@ def contamination_flags_rowlocal(docs: DataFrame, benchmark: DataFrame,
 
     from .dedup import shingles as _shingles
 
-    bench = {r["shingle"] for r in
-             _shingles(benchmark, id_col=id_col, text_col=text_col, n=n)
-             .select("shingle").distinct().collect()}
+    rows = (_shingles(benchmark, id_col=id_col, text_col=text_col, n=n)
+            .select("shingle").distinct()
+            .limit(MAX_ROWLOCAL_SHINGLES + 1).collect())
+    if len(rows) > MAX_ROWLOCAL_SHINGLES:
+        raise ValueError(
+            f"contamination_flags_rowlocal: the benchmark has more than "
+            f"{MAX_ROWLOCAL_SHINGLES} distinct {n}-gram shingles; use "
+            f"contamination_flags, which joins them in the JVM instead of "
+            f"collecting them to the driver")
+    bench = {r["shingle"] for r in rows}
     sc = docs.sparkSession.sparkContext
     bc = sc.broadcast(bench)
     ws = _re.compile(r"\s+", _re.ASCII)

@@ -10,7 +10,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark"]
+__all__ = ["default_cpus", "get_spark"]
+
+
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the number of cores this process may run
+    on: the ``local[N]`` width of a session started without a master."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def default_driver_memory() -> str:
@@ -30,7 +37,7 @@ def get_spark(app_name: str = "pysemanticcomplexity_spark",
               master: str = None,
               shuffle_partitions: int = None,
               extra_conf: dict = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     # Pin BLAS to ONE thread per python worker: Spark owns the parallelism
     # (one worker per core), so unpinned OpenBLAS oversubscribes the box —

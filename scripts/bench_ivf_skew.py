@@ -6,7 +6,8 @@ gaussian data captures ~every vector), and (c) ivf_topk wall time on the
 skewed quantizer with AQE skew-join handling ON vs OFF.
 
 Usage: python scripts/bench_ivf_skew.py [replicated_emb_parquet]
-       (defaults to /tmp/sim_scale_emb produced by bench_scaling_sim.py)
+       (defaults to /tmp/bench_scaling/sign_flipped-x16, the input
+       `python bench_scaling.py sim_lsh` writes)
 """
 from __future__ import annotations
 
@@ -44,7 +45,8 @@ def timed_topk(spark, emb, queries, cents, aqe: bool):
 
 
 def main():
-    path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sim_scale_emb"
+    path = (sys.argv[1] if len(sys.argv) > 1
+            else "/tmp/bench_scaling/sign_flipped-x16")
     spark = get_spark(app_name="ivf-skew", master="local[32]",
                       shuffle_partitions=32)
     emb = spark.read.parquet(path)

@@ -157,6 +157,21 @@ def test_rowlocal_contamination_equals_join_on_testdata(spark):
     assert a == b
 
 
+def test_rowlocal_contamination_refuses_oversized_benchmark(
+        spark, docs_df, monkeypatch):
+    """The benchmark shingle set is collected to the driver: past the cap
+    the row-local variant must refuse and point at the JVM-join one."""
+    from pysemanticcomplexity_spark.operators import corpus
+    bench = spark.createDataFrame(
+        [(100, "quick brown fox jumps high")], "doc_id long, text string")
+    monkeypatch.setattr(corpus, "MAX_ROWLOCAL_SHINGLES", 3)   # bench has 3
+    corpus.contamination_flags_rowlocal(docs_df, bench)
+    monkeypatch.setattr(corpus, "MAX_ROWLOCAL_SHINGLES", 2)
+    with pytest.raises(ValueError,
+                       match=r"more than 2 .*contamination_flags,"):
+        corpus.contamination_flags_rowlocal(docs_df, bench)
+
+
 def test_rowlocal_contamination_zero_shuffle(spark, docs_df):
     from pysemanticcomplexity_spark.operators.corpus import (
         contamination_flags_rowlocal)
