@@ -1569,9 +1569,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # portable-hash variant of the full minhash-LSH pipeline so DuckDB
         # can replicate it bucket-for-bucket (the xxhash64 production default
         # is covered by the recall-vs-exact pytest in tests/test_dedup.py).
-        # Signatures come from the fused two-level token-hash path —
-        # bit-identical to shingles()+minhash_signatures(hash_fn='poly')
-        # (equality-tested) with ~n x less per-char fold work.
+        # Signatures come from the two-level token-hash path, equal to a
+        # per-shingle-string poly fold (tested) with ~n x less fold work.
         from pysemanticcomplexity_spark.operators import dedup
         d = _docs_scaled(spark, sf_dir)
         sigs = dedup.minhash_signatures_poly_tokens(d, n=3, num_hashes=32)
@@ -1726,21 +1725,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # model-quality margin cutoff (QF4; the comparison is on the raw
         # double margin, bit-identical across engines because it derives
         # from one exact integer sum) -> stratified mix -> per-source
-        # rollup. Every stage is id-keyed, so Catalyst collapses the
-        # retain-set joins onto one partitioning of the 100 TB side. The
-        # compositional form re-scans documents per stage (fine at bench
-        # scale); a 100 TB run would stage the per-doc stats table once
-        # first, exactly like KGPipeline.run's staged tables, then join
-        # the narrow retain sets. corpus_prep_and_write materializes the
-        # same plan with per-bucket lineage + resume (tests/test_corpus).
+        # rollup. The row-local stages run in one scan of the documents;
+        # the exact-dedup keep set is the only other scan, joined back by
+        # id. corpus_prep_and_write materializes the same plan with
+        # per-bucket lineage + resume (tests/test_corpus).
         from pysemanticcomplexity_spark.operators.corpus import corpus_prep
         d = _docs(spark, sf_dir)
         bench = d.filter(F.col("doc_id") % 53 == 0)
         kept = corpus_prep(
             d, bench, {"src0": 1.0, "src1": 0.75, "src2": 0.5,
                        "src3": 0.25}, default_fraction=0.5,
-            contamination_threshold=0.05, mq_margin=-0.25,
-            fused=True)  # single-scan form; == staged by pytest + oracle
+            contamination_threshold=0.05, mq_margin=-0.25)
         return (kept.groupBy("source")
                 .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
                      F.sum("n_words").cast("long").alias("total_words")))

@@ -221,15 +221,15 @@ def _corpus_prep(spark):
     from pysemanticcomplexity_spark.operators import corpus
 
     def retained(d):
-        # the library flagship, single-scan form: the composition the
-        # driver E2E_corpus_prep oracle pins. All of it is timed: it
+        # the library flagship: the composition the driver
+        # E2E_corpus_prep oracle pins. All of it is timed: it
         # collects the benchmark shingles while building the plan.
         bench = d.filter((F.col("doc_id") < 1_000_000)
                          & (F.col("doc_id") % 53 == 0))
         kept = corpus.corpus_prep(
             d, bench, {"src0": 1.0, "src1": 0.75, "src2": 0.5, "src3": 0.25},
             default_fraction=0.5, contamination_threshold=0.05,
-            mq_margin=-0.25, fused=True)
+            mq_margin=-0.25)
         rows = (kept.groupBy("source")
                 .agg(F.count(F.lit(1)).alias("n_docs"),
                      F.sum("n_words").alias("total_words")).collect())

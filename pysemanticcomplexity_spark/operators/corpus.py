@@ -52,7 +52,7 @@ SAMPLE_B = 998_244_353
 # shingles), so this cap is ~100 MB per process and ~25 MB of broadcast.
 # A benchmark of thousands of documents stays far below it; larger
 # benchmark sets belong to contamination_flags, which broadcast-joins them
-# in the JVM.
+# in the JVM (corpus_prep switches to it above the cap).
 MAX_ROWLOCAL_SHINGLES = 1_000_000
 
 
@@ -96,6 +96,20 @@ def contamination_flags(docs: DataFrame, benchmark: DataFrame,
                  .alias("contamination")))
 
 
+def _benchmark_shingle_set(benchmark: DataFrame, n: int, id_col: str,
+                           text_col: str):
+    """The benchmark's distinct ``n``-gram shingles as a Python set, or None
+    when there are more than ``MAX_ROWLOCAL_SHINGLES`` of them (the collect
+    stops at one past the cap, so an oversized benchmark never reaches the
+    driver whole)."""
+    rows = (shingles(benchmark, id_col=id_col, text_col=text_col, n=n)
+            .select("shingle").distinct()
+            .limit(MAX_ROWLOCAL_SHINGLES + 1).collect())
+    if len(rows) > MAX_ROWLOCAL_SHINGLES:
+        return None
+    return {r["shingle"] for r in rows}
+
+
 def contamination_flags_rowlocal(docs: DataFrame, benchmark: DataFrame,
                                  n: int = 3, id_col: str = "doc_id",
                                  text_col: str = "text",
@@ -119,24 +133,25 @@ def contamination_flags_rowlocal(docs: DataFrame, benchmark: DataFrame,
     flag columns instead of projecting to (id, flags) — the shape a
     filter stage in a (streaming) pipeline needs.
     """
-    import re as _re
-
-    import pandas as pd
-
-    from .dedup import shingles as _shingles
-
-    rows = (_shingles(benchmark, id_col=id_col, text_col=text_col, n=n)
-            .select("shingle").distinct()
-            .limit(MAX_ROWLOCAL_SHINGLES + 1).collect())
-    if len(rows) > MAX_ROWLOCAL_SHINGLES:
+    bench = _benchmark_shingle_set(benchmark, n, id_col, text_col)
+    if bench is None:
         raise ValueError(
             f"contamination_flags_rowlocal: the benchmark has more than "
             f"{MAX_ROWLOCAL_SHINGLES} distinct {n}-gram shingles; use "
             f"contamination_flags, which joins them in the JVM instead of "
             f"collecting them to the driver")
-    bench = {r["shingle"] for r in rows}
-    sc = docs.sparkSession.sparkContext
-    bc = sc.broadcast(bench)
+    return _rowlocal_flags(docs, bench, n, id_col, text_col, passthrough)
+
+
+def _rowlocal_flags(docs: DataFrame, bench: set, n: int, id_col: str,
+                    text_col: str, passthrough: bool) -> DataFrame:
+    """The Arrow-batched kernel of ``contamination_flags_rowlocal`` over an
+    already collected benchmark shingle set."""
+    import re as _re
+
+    import pandas as pd
+
+    bc = docs.sparkSession.sparkContext.broadcast(bench)
     ws = _re.compile(r"\s+", _re.ASCII)
 
     def run(batches):
@@ -551,8 +566,7 @@ def corpus_prep(docs: DataFrame, benchmark: DataFrame,
                 mq_margin: float = -0.25,
                 id_col: str = "doc_id", text_col: str = "text",
                 strata_col: str = "source",
-                full_rows: bool = False,
-                fused: bool = False) -> DataFrame:
+                full_rows: bool = False) -> DataFrame:
     """The batch corpus-prep flagship as ONE declarative plan: Gopher
     quality filter -> exact-dedup representative keep -> benchmark
     decontamination -> model-quality margin cutoff -> stratified mix.
@@ -565,72 +579,54 @@ def corpus_prep(docs: DataFrame, benchmark: DataFrame,
     per row; dragging the text column through them multiplies the shuffle
     by the payload width for nothing (measured 2.9x on E2E at sf0.1).
 
+    Single-scan shape: the row-local stages — sample hash, Gopher rules,
+    model margin and benchmark contamination — run in ONE pass over the
+    corpus; the only other corpus touch is the exact-dedup keep-set
+    aggregation, joined back by id. The benchmark's distinct shingles are
+    collected (up to ``MAX_ROWLOCAL_SHINGLES``) into the row-local
+    contamination kernel; a larger benchmark runs ``contamination_flags``
+    (JVM broadcast join) on the same pre-filtered rows instead, joined back
+    by id — the same retained set either way.
+
     Semantics are pinned by the driver oracle ``E2E_corpus_prep`` (its
-    rollup is exactly ``corpus_prep(...).groupBy(source)``); every stage's
-    retain set is keyed by ``id_col``, so Catalyst collapses the joins
-    onto one partitioning of the corpus side.
+    rollup is exactly ``corpus_prep(...).groupBy(source)``).
     """
     from . import dedup, textstats
-    if fused:
-        # single-scan form (the "stage the per-doc stats once" note made
-        # real): the row-local stages — Gopher metrics, model margin,
-        # sample hash, and the broadcast-set contamination kernel — are
-        # computed in ONE pass over the corpus (mapInPandas passthrough +
-        # JVM expressions + one filter); the only other corpus touch is
-        # the exact-dedup keep-set aggregation, joined back by id. Two
-        # scans + one shuffle total, vs five scans + four joins staged;
-        # identical retained set (same row-local semantics, rowlocal
-        # contamination == join version by test, and the driver E2E
-        # oracle pins it cross-engine every round).
-        g = textstats.gopher_metric_exprs(text_col)
-        # the JVM-expressible filters (sample hash, Gopher rules, model
-        # margin) run BELOW the contamination mapInPandas: Catalyst cannot
-        # push a filter through an opaque Python node, so filtering first
-        # keeps (1 - selectivity) of the corpus out of the Arrow transfer
-        # and the python shingling entirely. Row-local conjunction order is
-        # free — the retained set is identical (E2E oracle pins it).
-        # n_words is computed BELOW the Python node and rides through the
-        # passthrough schema: computing it after the mapInPandas (round 5)
-        # re-ran the Gopher tokenize expression on the far side for one
-        # extra full regexp pass per surviving row.
-        pre = (stratified_sample(docs, fractions, strata_col=strata_col,
-                                 id_col=id_col,
-                                 default_fraction=default_fraction)
-               .filter(g["passes"]
-                       & (textstats.model_margin_expr(text_col) > mq_margin))
-               .withColumn("n_words", g["n_words"]))
-        kept = (contamination_flags_rowlocal(
-                    pre, benchmark, n=n, id_col=id_col, text_col=text_col,
-                    passthrough=True)
-                .filter(F.col("contamination") <= contamination_threshold))
-        keep = (dedup.exact_dedup(docs, id_col=id_col, text_col=text_col)
-                .select(F.col("keep_id").alias(id_col)))
-        kept = kept.join(keep, id_col)
-        if not full_rows:
-            return kept.select(id_col, strata_col, "n_words")
-        return docs.join(kept.select(id_col), id_col)
-
-    quality = (textstats.gopher_quality(docs, id_col=id_col,
-                                        text_col=text_col)
-               .filter("passes").select("id", "n_words"))
+    g = textstats.gopher_metric_exprs(text_col)
+    # the JVM-expressible filters (sample hash, Gopher rules, model
+    # margin) run BELOW the contamination mapInPandas: Catalyst cannot
+    # push a filter through an opaque Python node, so filtering first
+    # keeps (1 - selectivity) of the corpus out of the Arrow transfer
+    # and the python shingling entirely. Row-local conjunction order is
+    # free — the retained set is identical (E2E oracle pins it).
+    # n_words is computed BELOW the Python node and rides through the
+    # passthrough schema: computing it after the mapInPandas (round 5)
+    # re-ran the Gopher tokenize expression on the far side for one
+    # extra full regexp pass per surviving row.
+    pre = (stratified_sample(docs, fractions, strata_col=strata_col,
+                             id_col=id_col,
+                             default_fraction=default_fraction)
+           .filter(g["passes"]
+                   & (textstats.model_margin_expr(text_col) > mq_margin))
+           .withColumn("n_words", g["n_words"]))
+    # the row-local kernel whenever the set can be collected: on this same
+    # plan it measured 3.3 s against the JVM join's 5.1 s (sf0.1, 4 cores)
+    bench = _benchmark_shingle_set(benchmark, n, id_col, text_col)
+    if bench is not None:
+        flagged = _rowlocal_flags(pre, bench, n, id_col, text_col,
+                                  passthrough=True)
+    else:
+        flags = contamination_flags(pre, benchmark, n=n, id_col=id_col,
+                                    text_col=text_col)
+        flagged = pre.join(flags.select(F.col("id").alias(id_col),
+                                        "contamination"), id_col)
+    kept = flagged.filter(F.col("contamination") <= contamination_threshold)
     keep = (dedup.exact_dedup(docs, id_col=id_col, text_col=text_col)
-            .select(F.col("keep_id").alias("id")))
-    clean = (contamination_flags(docs, benchmark, n=n, id_col=id_col,
-                                 text_col=text_col)
-             .filter(F.col("contamination") <= contamination_threshold)
-             .select("id"))
-    mq = (textstats.model_quality_score(docs, id_col=id_col,
-                                        text_col=text_col)
-          .filter(F.col("margin") > mq_margin).select("id"))
-    sampled = (stratified_sample(docs, fractions, strata_col=strata_col,
-                                 id_col=id_col,
-                                 default_fraction=default_fraction)
-               .select(F.col(id_col).alias("id"), strata_col))
-    kept = (sampled.join(quality, "id").join(keep, "id")
-            .join(clean, "id").join(mq, "id"))
+            .select(F.col("keep_id").alias(id_col)))
+    kept = kept.join(keep, id_col)
     if not full_rows:
-        return kept.select(F.col("id").alias(id_col), strata_col, "n_words")
-    return docs.join(kept.select(F.col("id").alias(id_col)), id_col)
+        return kept.select(id_col, strata_col, "n_words")
+    return docs.join(kept.select(id_col), id_col)
 
 
 def corpus_prep_and_write(docs: DataFrame, benchmark: DataFrame,

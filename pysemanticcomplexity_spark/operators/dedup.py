@@ -14,7 +14,8 @@ web-corpus dedup family, each built scale-first:
 * embedding cosine — see operators/similarity.py.
 
 All hashing uses xxhash64 (JVM-side, deterministic across runs/executors) by
-default. The sketch operators also accept ``hash_fn="poly"`` — a polynomial
+default. The sketch operators also accept ``hash_fn="poly"`` (minhash:
+``minhash_signatures_poly_tokens``) — a polynomial
 mod-1e9+7 hash family computed from pure integer expressions that DuckDB can
 replicate verbatim, making the full LSH pipelines cross-engine hash-checkable
 (the ``T3_fingerprint`` portability trick applied to the sketch family).
@@ -108,7 +109,8 @@ def reliable_checkpointer(sc, checkpoint_dir):
 SPAN_COMBINE = 1_000_003  # gram-level multiplier of the two-level span hash
 
 __all__ = ["normalize_text", "exact_key_cols", "exact_dedup", "shingles",
-           "minhash_signatures", "lsh_candidate_pairs", "ngram_jaccard_pairs",
+           "minhash_signatures", "minhash_signatures_poly_tokens",
+           "lsh_candidate_pairs", "ngram_jaccard_pairs",
            "simhash", "simhash_rowlocal", "simhash_blocks",
            "simhash_candidate_pairs", "embedding_near_dups",
            "embedding_near_dups_bruteforce", "duplicate_clusters",
@@ -184,54 +186,46 @@ def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
             .filter(F.length("shingle") > 0))
 
 
-def minhash_signatures(sh: DataFrame, num_hashes: int = 32,
-                       hash_fn: str = "xxhash64") -> DataFrame:
-    """(id, sig array<long>): sig[i] = min over shingles of hash_i(shingle).
+def minhash_signatures(sh: DataFrame, num_hashes: int = 32) -> DataFrame:
+    """(id, sig array<long>): sig[i] = min over shingles of
+    xxhash64(shingle, i).
 
     Implemented as one groupBy with ``min`` aggregates over seeded hashes —
-    partial aggregation keeps the shuffle at one row per doc.
-
-    ``hash_fn='poly'`` hashes each shingle once with the portable polynomial
-    hash and derives the i-th family member affinely ((A_i*h + B_i) mod p) —
-    bit-identical in DuckDB, so the whole minhash-LSH pipeline becomes
-    oracle-checkable.
+    partial aggregation keeps the shuffle at one row per doc. The
+    engine-portable polynomial family is
+    :func:`minhash_signatures_poly_tokens`, which starts from the documents
+    rather than their shingles.
     """
-    if hash_fn == "xxhash64":
-        hashes = [F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}")
-                  for i in range(num_hashes)]
-        agg = sh.groupBy("id").agg(*hashes)
-    elif hash_fn == "poly":
-        base = sh.withColumn("h", poly_hash_expr(F.col("shingle")))
-        hashes = [F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(POLY_MOD))
-                  .alias(f"h{i}")
-                  for i, (a, b) in enumerate(minhash_seeds(num_hashes))]
-        agg = base.groupBy("id").agg(*hashes)
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    return agg.select("id", F.array(*[f"h{i}" for i in range(num_hashes)])
-                      .alias("sig"))
+    hashes = [F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}")
+              for i in range(num_hashes)]
+    return (sh.groupBy("id").agg(*hashes)
+            .select("id", F.array(*[f"h{i}" for i in range(num_hashes)])
+                    .alias("sig")))
 
 
 def minhash_signatures_poly_tokens(docs: DataFrame, n: int = 3,
                                    num_hashes: int = 32,
                                    id_col: str = "doc_id",
                                    text_col: str = "text") -> DataFrame:
-    """``shingles(docs, n) |> minhash_signatures(hash_fn='poly')`` fused
-    into one pass with TWO-LEVEL hashing — bit-identical signatures
-    (equality-tested), ~2x less per-char work.
+    """(id, sig array<long>) minhash signatures over the token ``n``-gram
+    shingles that ``shingles(docs, n)`` emits (n >= 2), in the
+    engine-portable polynomial family: sig[i] = min over shingles of
+    (A_i * poly(shingle) + B_i) mod POLY_MOD (``minhash_seeds``) —
+    bit-identical in DuckDB, so the whole minhash-LSH pipeline is
+    oracle-checkable.
 
-    The round-5 chain char-folded every SHINGLE STRING: with n-token
-    shingles each character is folded n times through an allocated
-    concat. Here each token is folded once into
-    ``(h, w) = (poly(tok), 31^len(tok) mod p)`` and the shingle hash
-    composes by the same fold identity as textstats._bucket_expr:
-    ``poly(a||' '||b) = ((poly(a)*31 + 32) % p * 31^len(b) + poly(b)) % p``.
+    TWO-LEVEL hashing: folding every shingle STRING would fold each
+    character n times through an allocated concat. Here each token is
+    folded once into ``(h, w) = (poly(tok), 31^len(tok) mod p)`` and the
+    shingle hash composes by the same fold identity as
+    textstats._bucket_expr:
+    ``poly(a||' '||b) = ((poly(a)*31 + 32) % p * 31^len(b) + poly(b)) % p``
+    (pinned against a per-shingle-string transcription by a test).
     Signature minima are unaffected by shingle multiplicity (min is
     idempotent), so skipping shingles()' array_distinct changes nothing.
     The (h, w) array is bound per gram position as a lambda variable
     (element_at on an attribute — O(1)); positions explode and one
-    partial-aggregated groupBy(id) takes the seeded affine minima
-    exactly as minhash_signatures does."""
+    partial-aggregated groupBy(id) takes the seeded affine minima."""
     base = docs.select(
         F.col(id_col).alias("id"),
         F.transform(
@@ -384,11 +378,11 @@ def ngram_jaccard_pairs(sh: DataFrame, threshold: float = 0.5,
 
 def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
                         id_col: str = "vec_id", vec_col: str = "embedding",
-                        method: str = "lsh", candidates_k: int = 50,
+                        candidates_k: int = 50,
                         **lsh_kwargs) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >= t).
 
-    The default path is scale-safe: SRP-LSH buckets generate candidate pairs
+    The path is scale-safe: SRP-LSH buckets generate candidate pairs
     (operators/similarity.py — queries and corpus only ever meet inside a
     shared hash bucket), and the cosine ``lsh_topk`` already computed for
     ranking is reused directly (``return_sim=True``) — no re-join of the
@@ -412,23 +406,26 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
     which recover such splits from the text side. The explicit pair list
     is complete for clusters up to ~candidates_k members.
 
-    ``method='bruteforce'`` (or :func:`embedding_near_dups_bruteforce`) is
-    the exact all-pairs crossJoin — the verification oracle for tests and
-    small fixtures, never the corpus-scale default.
+    :func:`embedding_near_dups_bruteforce` is the exact all-pairs
+    crossJoin — the verification oracle for tests and small fixtures, never
+    the corpus-scale path.
     """
-    if method not in ("lsh", "bruteforce"):
-        raise ValueError(f"method must be 'lsh' or 'bruteforce', got {method!r}")
-    if method == "lsh":
-        from .similarity import lsh_topk
-        cand = lsh_topk(emb, emb, k=candidates_k, id_col=id_col,
-                        vec_col=vec_col, return_sim=True, **lsh_kwargs)
-        return (cand.filter(F.col("sim") >= threshold)
-                .select(F.least("query_id", "neighbor_id").alias("id_a"),
-                        F.greatest("query_id", "neighbor_id").alias("id_b"),
-                        F.col("sim").alias("cosine"))
-                .groupBy("id_a", "id_b")
-                .agg(F.max("cosine").alias("cosine"))
-                .select("id_a", "id_b", F.round("cosine", 9).alias("cosine")))
+    from .similarity import lsh_topk
+    cand = lsh_topk(emb, emb, k=candidates_k, id_col=id_col,
+                    vec_col=vec_col, return_sim=True, **lsh_kwargs)
+    return (cand.filter(F.col("sim") >= threshold)
+            .select(F.least("query_id", "neighbor_id").alias("id_a"),
+                    F.greatest("query_id", "neighbor_id").alias("id_b"),
+                    F.col("sim").alias("cosine"))
+            .groupBy("id_a", "id_b")
+            .agg(F.max("cosine").alias("cosine"))
+            .select("id_a", "id_b", F.round("cosine", 9).alias("cosine")))
+
+
+def embedding_near_dups_bruteforce(emb: DataFrame, threshold: float = 0.95,
+                                   id_col: str = "vec_id",
+                                   vec_col: str = "embedding") -> DataFrame:
+    """Exact all-pairs cosine near-dups — O(N^2); the verification oracle."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     a = emb.select(F.col(id_col).alias("id_a"), v.alias("va"))
     b = emb.select(F.col(id_col).alias("id_b"), v.alias("vb"))
@@ -441,14 +438,6 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
                          (dot / (norm_a * norm_b)).alias("cosine"))
             .filter(F.col("cosine") >= threshold)
             .select("id_a", "id_b", F.round("cosine", 9).alias("cosine")))
-
-
-def embedding_near_dups_bruteforce(emb: DataFrame, threshold: float = 0.95,
-                                   id_col: str = "vec_id",
-                                   vec_col: str = "embedding") -> DataFrame:
-    """Exact all-pairs cosine near-dups — O(N^2); the verification oracle."""
-    return embedding_near_dups(emb, threshold, id_col, vec_col,
-                               method="bruteforce")
 
 
 def _check_simhash_bits(n_bits: int) -> None:
@@ -698,7 +687,12 @@ def fuzzy_dedup_retained(docs: DataFrame, pairs: DataFrame = None,
     """
     if pairs is None:
         sh = shingles(docs, id_col=id_col, text_col=text_col, n=shingle_n)
-        sigs = minhash_signatures(sh, num_hashes=num_hashes, hash_fn=hash_fn)
+        if hash_fn == "poly":
+            sigs = minhash_signatures_poly_tokens(
+                docs, n=shingle_n, num_hashes=num_hashes, id_col=id_col,
+                text_col=text_col)
+        else:
+            sigs = minhash_signatures(sh, num_hashes=num_hashes)
         cand = lsh_candidate_pairs(sigs, bands=bands, sig_len=num_hashes,
                                    hash_fn=hash_fn)
         pairs = (ngram_jaccard_pairs(sh, threshold=threshold,

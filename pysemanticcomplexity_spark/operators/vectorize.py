@@ -1,20 +1,16 @@
 """M1-M10: per-document semantic-complexity feature vectors.
 
 Per-document graphs are tiny (10^2-10^3 nodes — SURVEY.md §2.6), so the
-eccentricity/BFS metrics run inside an Arrow-batched
-``cogroup().applyInPandas`` keyed by url: one shuffle of the (small) nodes +
-triples tables, zero driver involvement, linear scale-out across documents.
+eccentricity/BFS metrics run per url group inside ONE Arrow-batched
+``mapInPandas`` after a hash repartition + in-partition sort by url: one
+shuffle of the (small) nodes + triples + word-count rows, zero driver
+involvement, linear scale-out across documents.
 
 The numeric feature definitions are shared with the pure-Python oracle
 (ref_semantics.vectorize_graph — itself a mirror of reference
 tranformers.py:40-186); what this module adds is the distributed execution
 shape and the graph reconstruction from relational rows. The graph
 *construction* path (DataFrame ops) is fully independent of the oracle's.
-
-A pure-DataFrame fast path (``features_df_only``) computes the
-SQL-expressible feature subset (M2/M3/M6/M8/M9 — counts, density, ratios,
-type/link moments) with partial-aggregated groupBys for workloads that do
-not need the BFS metrics; it is also the DuckDB-oracle surface.
 """
 from __future__ import annotations
 
@@ -24,15 +20,13 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
-from .. import FEATURE_COLUMNS, MANAGED_NAMESPACES, PRED_SUBCLASS_OF, VIRTUAL_ROOT
-from .. import schemas
 from .vectorize_kernel import compute_features
 
-__all__ = ["vectorize", "features_df_only", "pack_graph"]
+__all__ = ["vectorize"]
 
 
-def pack_graph(nodes: DataFrame, triples: DataFrame) -> DataFrame:
-    """Union nodes + edges into one url-grouped table for cogroup (2-way API)."""
+def _pack_graph(nodes: DataFrame, triples: DataFrame) -> DataFrame:
+    """Union nodes + edges into one table keyed by url (kinds 'n' and 'e')."""
     n = nodes.select(
         "url", F.lit("n").alias("kind"), F.col("node_id").alias("a"),
         F.lit(None).cast("string").alias("b"),
@@ -65,7 +59,7 @@ def vectorize(nodes: DataFrame, triples: DataFrame,
     schema = T.StructType(
         [T.StructField("filename", T.StringType(), False)]
         + [T.StructField(c, T.DoubleType(), True) for c in cols[1:]])
-    packed = pack_graph(nodes, triples)
+    packed = _pack_graph(nodes, triples)
 
     def compute_group(url, grp: pd.DataFrame) -> list:
         wpdf = grp[grp["kind"] == "w"]
@@ -148,68 +142,3 @@ def vectorize(nodes: DataFrame, triples: DataFrame,
               .repartition("url")
               .sortWithinPartitions("url"))
     return stream.mapInPandas(run, schema=schema)
-
-
-def features_df_only(nodes: DataFrame, triples: DataFrame,
-                     doc_words: DataFrame) -> DataFrame:
-    """SQL-expressible feature subset, pure DataFrame (no Python).
-
-    nbWord, nbConcepts, nbUniqueConcepts, concepts/words ratios, nbNodes,
-    density, nbTypes/nbLinkIn/nbLinkOut mean+population-std, and the
-    per-namespace node counts (M9 nbNodes_<ns>). Division follows the
-    documented NaN-on-zero-words divergence.
-    """
-    rsc = (nodes.filter("is_resource")
-           .groupBy("url")
-           .agg(F.sum("count").alias("nbConcepts"),
-                F.count("*").alias("nbUniqueConcepts"),
-                F.avg("nb_types").alias("nbTypesMean"),
-                F.stddev_pop("nb_types").alias("nbTypesStd"),
-                F.avg("nb_links_in").alias("nbLinkInMean"),
-                F.stddev_pop("nb_links_in").alias("nbLinkInStd"),
-                F.avg("nb_links_out").alias("nbLinkOutMean"),
-                F.stddev_pop("nb_links_out").alias("nbLinkOutStd")))
-    counts = nodes.groupBy("url").agg(F.count("*").alias("nbNodes"))
-    edge_counts = triples.groupBy("url").agg(F.count("*").alias("nbEdges"))
-
-    ns_counts = nodes.groupBy("url").agg(*[
-        F.sum(F.when(F.col("is_resource")
-                     | (F.col("node_id") == VIRTUAL_ROOT)
-                     | F.col("node_id").startswith(ns), 1).otherwise(0))
-        .alias(f"nbNodes_{key}")
-        for key, ns in MANAGED_NAMESPACES.items()])
-
-    out = (doc_words
-           .join(rsc, "url", "left").join(counts, "url", "left")
-           .join(edge_counts, "url", "left").join(ns_counts, "url", "left"))
-    nb_words = F.col("nb_words").cast("double")
-    zero = F.lit(0.0)
-    # undefined features are NULL (not NaN): Arrow ships pandas NaN as null,
-    # so NULL is the engine-wide canonical "undefined" in output tables
-    nan = F.lit(None).cast("double")
-    n = F.coalesce(F.col("nbNodes"), F.lit(0)).cast("double")
-    e = F.coalesce(F.col("nbEdges"), F.lit(0)).cast("double")
-    return out.select(
-        F.col("url").alias("filename"),
-        nb_words.alias("nbWord"),
-        F.coalesce(F.col("nbConcepts"), F.lit(0)).cast("double").alias("nbConcepts"),
-        F.coalesce(F.col("nbUniqueConcepts"), F.lit(0)).cast("double")
-        .alias("nbUniqueConcepts"),
-        F.when(nb_words != 0,
-               F.coalesce(F.col("nbConcepts"), F.lit(0)) / nb_words)
-        .otherwise(nan).alias("conceptsWordsRatio"),
-        F.when(nb_words != 0,
-               F.coalesce(F.col("nbUniqueConcepts"), F.lit(0)) / nb_words)
-        .otherwise(nan).alias("uniqueConceptsWordsRatio"),
-        n.alias("nbNodes"),
-        F.when(n > 1, F.lit(2.0) * e / (n * (n - F.lit(1.0))))
-        .otherwise(F.lit(1.0)).alias("density"),
-        F.col("nbTypesMean").cast("double").alias("nbTypesMean"),
-        F.col("nbTypesStd").cast("double").alias("nbTypesStd"),
-        F.col("nbLinkInMean").cast("double").alias("nbLinkInMean"),
-        F.col("nbLinkInStd").cast("double").alias("nbLinkInStd"),
-        F.col("nbLinkOutMean").cast("double").alias("nbLinkOutMean"),
-        F.col("nbLinkOutStd").cast("double").alias("nbLinkOutStd"),
-        *[F.coalesce(F.col(f"nbNodes_{key}"), zero).cast("double")
-          .alias(f"nbNodes_{key}") for key in MANAGED_NAMESPACES],
-    )

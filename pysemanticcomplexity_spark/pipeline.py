@@ -17,6 +17,7 @@ queries, stage-table CLI commands), with identical output:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Optional
 
 import pyspark.sql.functions as F
@@ -77,7 +78,13 @@ class KGPipeline:
         self.disambiguation = disambiguation
         self.broadcast_concept_info = broadcast_concept_info
         self.persist_intermediate = persist_intermediate
-        self.closure = graph.closure_table(spark, self.ontology_edge_rows)
+
+    @cached_property
+    def closure(self) -> DataFrame:
+        """G2 ancestor-edge closure table, built on first use: only the
+        staged ``run`` reads it, and the fused paths close the ontology in
+        their own broadcast state."""
+        return graph.closure_table(self.spark, self.ontology_edge_rows)
 
     def run(self, pages: DataFrame) -> PipelineResult:
         ann_kw = dict(support=self.support, types=self.types,

@@ -12,7 +12,6 @@ tests/test_sources.py).
 """
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
 from ..operators import fused
@@ -45,9 +44,7 @@ def streaming_triples_available_now(spark: SparkSession, src_dir: str,
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stream = reader.parquet(src_dir)
     docs = fused.fused_docs(spark, stream, state, with_features=False)
-    triples = (docs.select("url", F.explode("triples").alias("t"))
-               .select("url", "t.subj", "t.pred", "t.obj"))
-    return (triples.writeStream
+    return (fused.triples_from_docs(docs).writeStream
             .format("parquet")
             .option("path", dest_dir)
             .option("checkpointLocation", checkpoint_dir)

@@ -85,8 +85,8 @@ What the numbers say (and how the pipeline uses them):
   either way, but phase-1 of `types_agg_salted` bounds any single
   reducer's in-flight state to 1/32nd — the difference between finishing
   and OOM when the hub state exceeds executor memory at 100 TB. It is kept
-  available behind `concept_info(..., salted=True)` (the default, cheap at
-  dimension scale) and verified result-identical in tests/test_enrich.py.
+  available behind `concept_info(..., salted=True)` (off by default per
+  these measurements) and verified result-identical in tests/test_enrich.py.
 * **Join-side skew** is delegated to AQE (`spark.sql.adaptive.skewJoin`,
   on in session.py) which splits oversized partitions at runtime.
 * The fused pipeline sidesteps mention-side skew entirely: per-document

@@ -491,20 +491,32 @@ def test_corpus_prep_resume_after_kill(spark, tmp_path):
     assert all(rid == "resume" for b, rid in runs.items() if b > 2)
 
 
-def test_corpus_prep_fused_equals_staged(spark):
-    # the single-scan (fused) corpus prep must retain the identical
-    # (id, source, n_words) set as the staged join composition
+def test_corpus_prep_above_shingle_cap_joins_in_jvm(spark, monkeypatch):
+    # a benchmark with more distinct shingles than MAX_ROWLOCAL_SHINGLES
+    # cannot go through the row-local contamination kernel: corpus_prep
+    # must switch to the contamination_flags broadcast join (no Python
+    # node in the plan) and retain the identical (id, source, n_words) set
     import pyspark.sql.functions as F
-    from pysemanticcomplexity_spark.operators.corpus import corpus_prep
+    from pysemanticcomplexity_spark.operators import corpus
+    from pysemanticcomplexity_spark.operators.dedup import shingles
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     bench = d.filter(F.col("doc_id") % 53 == 0)
     fr = {"src0": 1.0, "src1": 0.75, "src2": 0.5, "src3": 0.25}
     kw = dict(default_fraction=0.5, contamination_threshold=0.05,
               mq_margin=-0.25)
-    a = sorted(map(tuple, corpus_prep(d, bench, fr, **kw).collect()))
-    b = sorted(map(tuple,
-                   corpus_prep(d, bench, fr, fused=True, **kw).collect()))
-    assert a == b and a
+
+    def run():
+        kept = corpus.corpus_prep(d, bench, fr, **kw)
+        return (plans.executed_plan(kept),
+                sorted(map(tuple, kept.collect())))
+
+    kernel_plan, want = run()
+    n_bench = shingles(bench).select("shingle").distinct().count()
+    monkeypatch.setattr(corpus, "MAX_ROWLOCAL_SHINGLES", n_bench - 1)
+    join_plan, got = run()
+    assert "MapInPandas" in kernel_plan
+    assert "MapInPandas" not in join_plan
+    assert got == want and want
 
 
 def test_chunk_documents_invariants(spark):

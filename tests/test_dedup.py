@@ -1,5 +1,6 @@
 """Dedup operators: exact, minhash/LSH, simhash, n-gram Jaccard."""
 import itertools
+import re
 
 import pytest
 import pyspark.sql.functions as F
@@ -131,13 +132,6 @@ def test_embedding_near_dups_lsh_default_superset_of_bruteforce(spark):
     assert lsh == brute                 # and exact verification kills noise
 
 
-def test_embedding_near_dups_rejects_unknown_method(spark):
-    import pytest as _pytest
-    df = spark.createDataFrame([(0, [1.0])], "vec_id long, embedding array<float>")
-    with _pytest.raises(ValueError, match="method"):
-        dedup.embedding_near_dups(df, method="nope")
-
-
 def test_portable_minhash_matches_xxhash_pairs_on_dups(spark):
     """hash_fn='poly' is a different hash family but identical LSH
     semantics: exact duplicate docs must collide in every band under both."""
@@ -146,9 +140,11 @@ def test_portable_minhash_matches_xxhash_pairs_on_dups(spark):
          (2, "alpha beta gamma delta epsilon zeta"),
          (3, "totally different words here entirely now")],
         "doc_id long, text string")
-    sh = dedup.shingles(docs)
-    for fn in ("xxhash64", "poly"):
-        sigs = dedup.minhash_signatures(sh, num_hashes=32, hash_fn=fn)
+    sigs_by_fn = {
+        "xxhash64": dedup.minhash_signatures(dedup.shingles(docs),
+                                             num_hashes=32),
+        "poly": dedup.minhash_signatures_poly_tokens(docs, num_hashes=32)}
+    for fn, sigs in sigs_by_fn.items():
         pairs = {(r["id_a"], r["id_b"]) for r in
                  dedup.lsh_candidate_pairs(sigs, bands=8, sig_len=32,
                                            hash_fn=fn).collect()}
@@ -301,8 +297,9 @@ def test_embedding_near_dups_mega_cluster_connectivity(spark):
 
 
 def test_fuzzy_dedup_retained_with_planted_dups(spark):
-    """Pipeline path (pairs=None) and explicit-pairs path agree, keep each
-    cluster's min id, and leave singletons untouched."""
+    """Pipeline path (pairs=None, both hash families) and explicit-pairs
+    path agree, keep each cluster's min id, and leave singletons
+    untouched."""
     base = ("the quick brown fox jumps over the lazy dog and then "
             "runs far away into the deep dark forest tonight")
     rows = [
@@ -315,9 +312,11 @@ def test_fuzzy_dedup_retained_with_planted_dups(spark):
             "watermarks and exactly once file sinks"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    kept = {r["doc_id"] for r in
-            dedup.fuzzy_dedup_retained(docs, threshold=0.5).collect()}
-    assert kept == {0, 3, 4}
+    for fn in ("xxhash64", "poly"):
+        kept = {r["doc_id"] for r in
+                dedup.fuzzy_dedup_retained(docs, threshold=0.5,
+                                           hash_fn=fn).collect()}
+        assert kept == {0, 3, 4}, fn
     sh = dedup.shingles(docs)
     pairs = dedup.ngram_jaccard_pairs(sh, threshold=0.5) \
         .select("id_a", "id_b")
@@ -834,15 +833,39 @@ def test_bloom_sharded_equals_broadcast(spark):
         assert a == b, hash_fn
 
 
+def _py_poly_minhash(text, n, num_hashes):
+    """Per-shingle-string transcription of the portable minhash: normalize
+    (lower, trim spaces, collapse whitespace), take the distinct n-token
+    shingle strings, poly-fold each one, then the seeded affine minima.
+    None for a text without shingles."""
+    toks = re.sub(r"\s+", " ", text.lower().strip(" "), flags=re.ASCII) \
+        .split(" ")
+    grams = {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+    grams.discard("")
+    if not grams:
+        return None
+    p = dedup.POLY_MOD
+    hs = []
+    for g in grams:
+        acc = 0
+        for ch in g:
+            acc = (acc * 31 + ord(ch)) % p
+        hs.append(acc)
+    return [min((a * h + b) % p for h in hs)
+            for a, b in dedup.minhash_seeds(num_hashes)]
+
+
 def test_minhash_two_level_signatures_identical(spark, docs):
-    """The fused two-level token-hash path must produce bit-identical
-    poly signatures to shingles() |> minhash_signatures(hash_fn='poly')
-    (the round-6 D3 optimization)."""
-    sh = dedup.shingles(docs)
-    a = {r["id"]: list(r["sig"]) for r in
-         dedup.minhash_signatures(sh, num_hashes=16,
-                                  hash_fn="poly").collect()}
-    b = {r["id"]: list(r["sig"]) for r in
-         dedup.minhash_signatures_poly_tokens(
-             docs, n=3, num_hashes=16).collect()}
-    assert a == b
+    """The two-level token-hash path (round-6 D3 optimization) must produce
+    exactly the signatures of folding every shingle string."""
+    extra = spark.createDataFrame(
+        [(8, "tab\tseparated Words\nand  new lines here"),
+         (9, "one two three")], "doc_id long, text string")
+    both = docs.unionByName(extra)
+    want = {r["doc_id"]: _py_poly_minhash(r["text"], 3, 16)
+            for r in both.collect()}
+    want = {k: v for k, v in want.items() if v is not None}
+    got = {r["id"]: list(r["sig"]) for r in
+           dedup.minhash_signatures_poly_tokens(
+               both, n=3, num_hashes=16).collect()}
+    assert got == want and len(want) == 8

@@ -127,27 +127,6 @@ def test_nb_words_fallback_max_offset():
     assert _close(v["textDensityStd"], 0.0)
 
 
-def test_df_only_features_match_full(spark, pipeline_result):
-    """The pure-DataFrame fast path equals the applyInPandas path on its
-    feature subset."""
-    from pysemanticcomplexity_spark.operators import vectorize as V
-    sub = V.features_df_only(pipeline_result.nodes, pipeline_result.triples,
-                             pipeline_result.doc_words)
-    full = {r["filename"]: r for r in pipeline_result.features.collect()}
-    for r in sub.collect():
-        f = full[r["filename"]]
-        for c in ["nbWord", "nbConcepts", "nbUniqueConcepts",
-                  "conceptsWordsRatio", "uniqueConceptsWordsRatio",
-                  "nbNodes", "density", "nbTypesMean", "nbTypesStd",
-                  "nbLinkInMean", "nbLinkInStd", "nbLinkOutMean",
-                  "nbLinkOutStd", "nbNodes_DBPedia", "nbNodes_Schema",
-                  "nbNodes_yago"]:
-            a, b = r[c], f[c]
-            if r["nbNodes"] == 0 and c == "density":
-                continue  # df path has no node rows for empty graphs; both define 1.0
-            assert _close(a, b, 1e-9), (r["filename"], c, a, b)
-
-
 def _kernel_vector(g):
     """Run the numpy kernel on a DocGraph, mirroring vectorize()'s marshal."""
     from pysemanticcomplexity_spark.operators.vectorize_kernel import compute_features
